@@ -8,12 +8,13 @@ import org.apache.spark.sql.SparkSession
 object Explain {
 
   /** Env-gated dump of an operator's INTERNAL plan (round-13): the
-    * self-contained operators (Graph.*, Dedup.connectedComponents) return
-    * an eagerly materialized checkpoint, so the caller-visible plan is
-    * just `Scan ExistingRDD` — the computation's real shape is the frame
-    * right before that final cut. With SPARK_GRAFT_EXPLAIN_INTERNAL set,
-    * each operator prints that pre-checkpoint plan (evidence channel for
-    * plans/rNN; a no-op otherwise, so the timed paths are unaffected). */
+    * iterative operators (Graph.*, Dedup.connectedComponents; called from
+    * `operators.Iterate.finish`) return an eagerly materialized
+    * checkpoint, so the caller-visible plan is just `Scan ExistingRDD` —
+    * the computation's real shape is the frame right before that final
+    * cut. With SPARK_GRAFT_EXPLAIN_INTERNAL set, each operator prints that
+    * pre-checkpoint plan (evidence channel for plans/rNN; a no-op
+    * otherwise, so the timed paths are unaffected). */
   def internal(tag: String, df: org.apache.spark.sql.Dataset[_]): Unit =
     if (sys.env.contains("SPARK_GRAFT_EXPLAIN_INTERNAL")) {
       println(s"==== internal plan: $tag (pre-checkpoint) ====")

@@ -3,8 +3,8 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** One place for the local-mode session knobs shared by Verify, Bench and
-  * the timing tools (MicroBench, Probe), so correctness runs and every
-  * measurement use the same configuration. */
+  * the tools (MicroBench, ExplainDump, ScaleUp), so correctness runs and
+  * every measurement use the same configuration. */
 object LocalSession {
 
   /** Shuffle/checkpoint scratch on tmpfs when available. local[32] writes

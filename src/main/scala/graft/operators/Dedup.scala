@@ -367,14 +367,12 @@ object Dedup {
     * fixpoint test is an action per iteration — the documented exception to
     * the no-eager-actions rule for fixpoint operators. */
   def connectedComponents(pairs: DataFrame, maxIter: Int = 20): DataFrame = {
+    val it = new Iterate("connectedComponents labels")
     // materialize the edge list ONCE — without this every iteration's join
-    // re-executes the entire upstream candidate/verify pipeline. Pinned via
-    // persist AFTER a repartition on the iteration join key, NOT
-    // localCheckpoint: a checkpoint scans back with unknown partitioning
-    // under AQE and every iteration would re-shuffle the edge side, while
-    // InMemoryTableScan keeps the cached HashPartitioning so only the
-    // node-sized labels move per round (the q111 PageRank lesson; eager
-    // count so the first iteration doesn't pay the build).
+    // re-executes the entire upstream candidate/verify pipeline. Pinned on
+    // the iteration join key (the Iterate discipline: only the node-sized
+    // labels move per round; eager count so the first iteration doesn't
+    // pay the build).
     // symmetrize with ONE pass over the pair list (round-12, guide §1.2
     // "don't compute things you throw away"): the former
     // `pairs.union(pairs.swapped)` executed the ENTIRE upstream pair
@@ -382,16 +380,14 @@ object Dedup {
     // of every caller — once per union branch during the pin's
     // materialization; emitting both directions from a single scan via
     // explode produces the identical edge multiset in one execution
-    val edges = pairs.select(explode(array(
+    val edges = it.pinOn(pairs.select(explode(array(
         struct(col("doc_a").as("src"), col("doc_b").as("dst")),
         struct(col("doc_b").as("src"), col("doc_a").as("dst")))).as("__e"))
-      .select(col("__e.src").as("src"), col("__e.dst").as("dst"))
-      .repartition(col("src"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .select(col("__e.src").as("src"), col("__e.dst").as("dst")),
+      "src", sorted = false)
     edges.count(): Unit
-    var labels = edges.select(col("src").as("id")).distinct()
-      .withColumn("comp", col("id"))
-      .localCheckpoint()
+    var labels = it.cut(edges.select(col("src").as("id")).distinct()
+      .withColumn("comp", col("id")))
     var i = 0
     var converged = false
     while (i < maxIter && !converged) {
@@ -403,22 +399,16 @@ object Dedup {
       // iteration, same fixpoint, same labels (round-12 optimization;
       // the old shape ran join+agg, checkpoint, then a second
       // convergence join per round)
-      val next = labels.join(prop, Seq("id"), "left_outer")
+      val next = it.cut(labels.join(prop, Seq("id"), "left_outer")
         .select(col("id"), col("comp").as("__prev"),
-          least(col("comp"), coalesce(col("ncomp"), col("comp"))).as("comp"))
-        .localCheckpoint()
+          least(col("comp"), coalesce(col("ncomp"), col("comp"))).as("comp")))
       converged = next.filter(col("__prev") =!= col("comp")).isEmpty
       labels = next.select(col("id"), col("comp"))
       i += 1
     }
-    // self-contained invocation (round-13, verdict Next #1): `labels` is a
-    // projection of the last eager checkpoint, so the edge pin is fully
-    // consumed by now — release it instead of leaking blocks for the rest
-    // of the session (the never-unpersisted-pin class the round-12 verdict
-    // flagged across a 528-query Verify run)
-    graft.Explain.internal("connectedComponents labels", labels)
-    edges.unpersist(blocking = false): Unit
-    labels
+    // `labels` is a projection of the last eager cut, so it is returned as
+    // is; the edge pin and the earlier cuts are released
+    it.finish(labels, materialize = false)
   }
 
   /** End-to-end corpus dedup: exact-duplicate collapse → MinHash-verified

@@ -9,10 +9,12 @@ import org.apache.spark.sql.functions._
   * supplier importance, document citation weight, user interaction hubs).
   *
   * Scale shape: each iteration is one equi-join (edges ⋈ ranks on src) +
-  * one hash aggregate (inflow per dst) — the textbook distributed PR step;
-  * ranks are `localCheckpoint`ed per iteration (the connected-components
-  * lineage-cut discipline: without it iteration k's plan re-executes all
-  * k-1 predecessors). Edge and degree tables are computed once.
+  * one hash aggregate (inflow per dst) — the textbook distributed PageRank
+  * step. Every iterative operator here runs the [[Iterate]] lifecycle:
+  * static tables are pinned once, pre-partitioned on their join keys; loop
+  * state is `localCheckpoint`-cut at the operator's cadence (without it
+  * iteration k's plan re-executes all k-1 predecessors); exit materializes
+  * the result and releases everything else.
   */
 object Graph {
 
@@ -28,59 +30,51 @@ object Graph {
     * across rounds. The teleport+damping combine is plain double arithmetic
     * (same IEEE expression shape in any engine), rounded to 12 dp so each
     * round starts from an identical representable value. */
-  def pageRank(edges: DataFrame, iters: Int = 5, d: Double = 0.85,
-               checkpointEvery: Int = 2): DataFrame = {
+  def pageRank(edges: DataFrame, iters: Int = 5, d: Double = 0.85): DataFrame = {
     require(iters >= 1, "need at least one iteration")
     require(d > 0 && d < 1, "damping must be in (0,1)")
-    require(checkpointEvery >= 1, "checkpointEvery must be positive")
-    // The static tables (edges, degrees, nodes) are PRE-PARTITIONED on
-    // their join keys and pinned with persist(MEMORY_AND_DISK), NOT
-    // localCheckpoint: a checkpoint's Scan ExistingRDD reports unknown
-    // partitioning under AQE (measured — EnsureRequirements then re-shuffles
-    // the edge side EVERY round), while InMemoryTableScan keeps the cached
-    // plan's HashPartitioning (Spark pins cached-plan partitioning under
-    // AQE by default), so each round's e⋈ranks and ⋈deg joins reuse the
-    // stored distribution — per round only ranks/inflow move. MEMORY_AND_DISK
-    // spills rather than silently evicting, and the eager count()
-    // materializes once so no round pays the build. Their plans are shallow
-    // and static, so keeping lineage (unlike ranks) costs nothing.
-    import org.apache.spark.storage.StorageLevel
+    val it = new Iterate("pageRank result")
+    // The static tables (edges, degrees, nodes) are pinned; their plans are
+    // shallow and static, so keeping lineage (unlike ranks) costs nothing.
     // round-13 (guide §1.2/§2.3): compute each node's contribution ONCE
     // per round, not once per edge. c = round(r/deg, 12)::decimal(38,12)
     // depends only on the SOURCE node, yet the former shape evaluated it
     // per edge row — Round + the decimal cast each allocate BigDecimals,
     // so |E| × iters BigDecimal round-trips dominated the rounds' CPU
-    // (Probe111: rounds 108 → ~33 CPU-s with the per-node form). The
-    // node-sized c-table (deg ⋈ ranks, |V| rows) now carries the READY
-    // decimal onto the edge join; the per-edge work is a hash probe +
-    // exact decimal sum. The sum is over the identical decimal multiset —
-    // exact decimal addition is reduction-order-independent, so the
-    // result is bit-identical to the per-edge form.
-    // sortWithinPartitions: the cached plan's output ordering is visible
-    // through InMemoryTableScan, so every round's sort-merge join streams
-    // the pinned edges in place instead of re-sorting |E| rows per round
-    // (the former ed = base ⋈ deg pin was sorted as an SMJ byproduct;
-    // keeping that property costs one sort at build)
-    val e = edges.select(col("src"), col("dst")).repartition(col("src"))
-      .sortWithinPartitions(col("src"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    // (OPTIMIZATION_r13.md phase 2, item 2: q111 steady 166 → 42-72
+    // CPU-s at sf0.1). The node-sized c-table (deg ⋈ ranks, |V| rows) now
+    // carries the READY decimal onto the edge join; the per-edge work is a
+    // hash probe + exact decimal sum. The sum is over the identical
+    // decimal multiset — exact decimal addition is
+    // reduction-order-independent, so the result is bit-identical to the
+    // per-edge form.
+    // The edge pin is sorted: every round's sort-merge join streams it in
+    // place (the former ed = base ⋈ deg pin was sorted as an SMJ
+    // byproduct; keeping that property costs one sort at build)
+    val e = it.pinOn(edges.select(col("src"), col("dst")), "src")
     // node-sized degree table off the pinned edges — the agg inherits the
     // pin's src-partitioning (no exchange)
-    val deg = e.groupBy(col("src")).agg(count(lit(1)).as("deg"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val deg = it.pin(e.groupBy(col("src")).agg(count(lit(1)).as("deg")))
     // one cached scan emitting both endpoints (round-13): the former
     // union(select src, select dst) scanned the edge pin twice
-    val nodes = e.select(explode(array(col("src"), col("dst"))).as("node"))
-      .distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val nodes = it.pin(e.select(explode(array(col("src"), col("dst"))).as("node"))
+      .distinct())
     // one materialization job fills the edge pin and nodes; deg fills off
     // e's cache without an exchange (round-13 job-count trim)
     nodes.count(): Unit
     deg.count(): Unit
     val nc = broadcast(nodes.agg(count(lit(1)).cast("double").as("n_nodes")))
-    var ranks = nodes.crossJoin(nc)
+    val ranks0 = nodes.crossJoin(nc)
       .select(col("node"), (lit(1.0d) / col("n_nodes")).as("r"))
-    for (k <- 1 to iters) {
+    // rounds chain LAZILY (each ranks appears once in the next round's
+    // plan — no exponential growth, and no per-round materialization
+    // barrier; unlike connectedComponents there is no per-iteration
+    // action forcing one). The periodic EAGER cut bounds how many join+agg
+    // rounds any single action can re-execute; every-2-rounds keeps the
+    // worst-case recompute cliff at 2 rounds (measured: every-4 let one
+    // evicted block re-run a 4-round chain, spiking a single iteration
+    // 3-7x).
+    val ranks = it.rounds(ranks0, iters, cutEvery = 2) { ranks =>
       // per-node contribution (|V| rows): the only place Round/decimal
       // casts run — 1600 evaluations per round instead of 1.17 M at sf0.1
       val ctbl = deg.join(ranks, deg("src") === ranks("node"))
@@ -90,35 +84,13 @@ object Graph {
         .select(col("dst").as("node"), col("c"))
       val inflow = contrib.groupBy(col("node"))
         .agg(sum(col("c")).cast("double").as("inflow"))
-      ranks = nodes.crossJoin(nc)
+      nodes.crossJoin(nc)
         .join(inflow, Seq("node"), "left")
         .select(col("node"),
           round(lit(1.0d - d) / col("n_nodes")
             + lit(d) * coalesce(col("inflow"), lit(0.0d)), 12).as("r"))
-      // rounds chain LAZILY (each ranks appears once in the next round's
-      // plan — no exponential growth, and no per-round materialization
-      // barrier; unlike connectedComponents there is no per-iteration
-      // action forcing one). The periodic EAGER cut (localCheckpoint's
-      // default) bounds how many join+agg rounds any single action can
-      // re-execute; every-2-rounds keeps the worst-case recompute cliff at
-      // 2 rounds (measured: every-4 let one evicted block re-run a 4-round
-      // chain, spiking a single iteration 3-7x).
-      if (k % checkpointEvery == 0 && k < iters) ranks = ranks.localCheckpoint()
     }
-    // Self-contained invocation (round-13, verdict Next #1): materialize
-    // the result eagerly, then RELEASE the operator-internal pins. The
-    // former never-unpersisted pins leaked blocks across a long session
-    // (§5 memory-pressure debt over a 528-query Verify run) and made the
-    // bench's min-over-iterations steady ride cache-manager plan-match
-    // reuse of iteration 1's pins — a warm-cache artifact, not the
-    // per-invocation cost the 100 TB story depends on. Every timed
-    // invocation now pays its own edge build.
-    graft.Explain.internal("pageRank result", ranks)
-    val out = ranks.localCheckpoint()
-    e.unpersist(blocking = false): Unit
-    deg.unpersist(blocking = false): Unit
-    nodes.unpersist(blocking = false): Unit
-    out
+    it.finish(ranks)
   }
 
   /** Shortest-hop distances from a seed set over a directed edge list —
@@ -136,14 +108,11 @@ object Graph {
     * for every node reachable within maxHops, hops = minimum distance. */
   def bfsHops(edges: DataFrame, seeds: DataFrame, maxHops: Int): DataFrame = {
     require(maxHops >= 0, "maxHops must be non-negative")
-    import org.apache.spark.storage.StorageLevel
-    val e = edges.select(col("src"), col("dst"))
-      .repartition(col("src")).sortWithinPartitions(col("src"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val it = new Iterate("bfsHops result")
+    val e = it.pinOn(edges.select(col("src"), col("dst")), "src")
     e.count(): Unit
-    var dist = seeds.select(col("node")).distinct()
-      .select(col("node"), lit(0).cast("int").as("hops"))
-      .localCheckpoint()
+    var dist = it.cut(seeds.select(col("node")).distinct()
+      .select(col("node"), lit(0).cast("int").as("hops")))
     var frontier = dist
     var k = 1
     var frontierSize = frontier.count()
@@ -152,21 +121,20 @@ object Graph {
       // anti-join bounds the candidate set by |V|, not by edge multiplicity
       val candidates = frontier.join(e, frontier("node") === e("src"))
         .select(e("dst").as("node")).distinct()
-      frontier = candidates.join(dist, Seq("node"), "left_anti")
-        .select(col("node"), lit(k).cast("int").as("hops"))
-        .localCheckpoint()
+      frontier = it.cut(candidates.join(dist, Seq("node"), "left_anti")
+        .select(col("node"), lit(k).cast("int").as("hops")))
       // dist IS re-checkpointed per round deliberately: a lazy union of
       // the pinned frontiers was tried in round 12 and measured SLOWER
       // (q371 3.3 → 5.0 s, q145 2.8 → 3.2 s) — the per-round anti-join
       // build side then scans k separate 32-partition frames instead of
       // one compact RDD, and the extra task count outweighs the saved
       // materialization job
-      dist = dist.union(frontier).localCheckpoint()
+      dist = it.cut(dist.union(frontier))
       frontierSize = frontier.count()
       k += 1
     }
-    e.unpersist(): Unit
-    dist
+    // dist is the last cut, so the result is already materialized
+    it.finish(dist, materialize = false)
   }
 
   /** Per-node triangle counts over an undirected edge list — the clustering
@@ -201,10 +169,9 @@ object Graph {
     * Scale shape: each round is one src-partitioned equi-join + one hash
     * agg (min is associative — map-side partial); edges pre-partitioned
     * on src and pinned once (the pageRank static-table discipline);
-    * labels localCheckpoint-cut every `checkpointEvery` rounds to bound
-    * the recompute cliff. */
-  def labelPropagation(edges: DataFrame, rounds: Int,
-                       checkpointEvery: Int = 2): DataFrame = {
+    * labels localCheckpoint-cut every 2 rounds to bound the recompute
+    * cliff. */
+  def labelPropagation(edges: DataFrame, rounds: Int): DataFrame = {
     // Self-loop augmentation (round-13, guide §2.4): the min-label update
     // is new(v) = min(lbl(v), min over incoming lbl(u)) — pinning a
     // self-loop (v,v) per node folds the keep-own-label branch INTO the
@@ -212,12 +179,12 @@ object Graph {
     // former shape read lbl twice: push join + unionAll, which both
     // forced an eager node-sized checkpoint EVERY round and scanned an
     // extra union branch). One reference per round means rounds chain
-    // lazily without doubling — checkpointEvery back to 2, the pageRank
+    // lazily without doubling — a cut every 2 rounds, the pageRank
     // discipline — and each round is exactly one join + one agg over the
     // pinned (edges ∪ self-loops) table. min over the augmented in-edges
     // is the identical fixpoint (self-loop carries lbl(v) itself).
     require(rounds >= 1, "need at least one round")
-    import org.apache.spark.storage.StorageLevel
+    val it = new Iterate("labelPropagation result")
     val base = edges.select(col("src"), col("dst")).repartition(col("src"))
     // self-loops for EVERY endpoint (src ∪ dst — callers supply symmetric
     // lists, but the augmentation must not assume it); both references to
@@ -226,25 +193,20 @@ object Graph {
     val loops = base.select(explode(array(col("src"), col("dst"))).as("n"))
       .distinct()
       .select(col("n").as("src"), col("n").as("dst"))
-    val e = base.unionAll(loops).repartition(col("src"))
-      .sortWithinPartitions(col("src"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val e = it.pinOn(base.unionAll(loops), "src")
     e.count(): Unit
-    // every node owns a self-loop, so the src-distinct over the pin covers
-    // all endpoints — the former separate nodes pin is subsumed
-    var lbl = e.select(col("src").as("node"), col("src").as("lbl")).distinct()
-    for (k <- 1 to rounds) {
-      lbl = e.join(lbl, e("src") === lbl("node"))
+    // seed the labels from the pinned self-loops, the node set the loop
+    // derivation already computed: a filter over the pin, not a distinct
+    // over all |E|+|V| rows. An input self-loop repeats its node's row,
+    // which round 1's min aggregate absorbs.
+    val lbl0 = e.filter(col("src") === col("dst"))
+      .select(col("src").as("node"), col("src").as("lbl"))
+    val lbl = it.rounds(lbl0, rounds, cutEvery = 2) { lbl =>
+      e.join(lbl, e("src") === lbl("node"))
         .select(col("dst").as("node"), col("lbl"))
         .groupBy(col("node")).agg(min(col("lbl")).as("lbl"))
-      if (k % checkpointEvery == 0 && k < rounds) lbl = lbl.localCheckpoint()
     }
-    // self-contained invocation (round-13, verdict Next #1 — the pageRank
-    // note): materialize, then release the pin
-    graft.Explain.internal("labelPropagation result", lbl)
-    val out = lbl.localCheckpoint()
-    e.unpersist(blocking = false): Unit
-    out
+    it.finish(lbl)
   }
 
   /** Bounded-round multi-source Bellman-Ford over a weighted edge list
@@ -257,10 +219,9 @@ object Graph {
     *
     * Scale shape: per round ONE src-partitioned equi-join + one
     * mergeable-min hash agg; edges pinned once (static-table
-    * discipline); periodic lineage cuts. Unreached nodes are absent
-    * (no ∞ sentinel rows). */
-  def shortestPaths(edges: DataFrame, seeds: DataFrame, rounds: Int,
-                    checkpointEvery: Int = 2): DataFrame = {
+    * discipline); a lineage cut every 2 rounds (the labelPropagation
+    * cadence). Unreached nodes are absent (no ∞ sentinel rows). */
+  def shortestPaths(edges: DataFrame, seeds: DataFrame, rounds: Int): DataFrame = {
     // Self-loop augmentation (round-13 — the labelPropagation note): a
     // zero-weight self-loop per node folds the keep-own-distance branch
     // into the relax join, so dist is referenced ONCE per round (one join
@@ -269,31 +230,27 @@ object Graph {
     // Self-loops cover every endpoint AND every seed — a seed with no
     // edges must survive the rounds exactly as the union form kept it.
     require(rounds >= 1, "need at least one round")
-    import org.apache.spark.storage.StorageLevel
+    val it = new Iterate("shortestPaths result")
+    // one lazy cut of the seeds projection feeds both the self-loops and
+    // the initial distances, so the seeds plan runs once: the pin build
+    // fills the cut, and round 1 reads it back
+    val s = it.cut(seeds.select(col("node")), eager = false)
     val base = edges.select(col("src"), col("dst"), col("w"))
       .repartition(col("src"))
     val zeroW = lit(0L).cast(base.schema.apply("w").dataType)
     val loops = base.select(explode(array(col("src"), col("dst"))).as("n"))
-      .unionAll(seeds.select(col("node").as("n")))
+      .unionAll(s.select(col("node").as("n")))
       .distinct()
       .select(col("n").as("src"), col("n").as("dst"), zeroW.as("w"))
-    val e = base.unionAll(loops).repartition(col("src"))
-      .sortWithinPartitions(col("src"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val e = it.pinOn(base.unionAll(loops), "src")
     e.count(): Unit
-    var dist = seeds.select(col("node"), lit(0L).as("dist"))
-    for (k <- 1 to rounds) {
-      dist = e.join(dist, e("src") === dist("node"))
+    val dist0 = s.select(col("node"), lit(0L).as("dist"))
+    val dist = it.rounds(dist0, rounds, cutEvery = 2) { dist =>
+      e.join(dist, e("src") === dist("node"))
         .select(col("dst").as("node"), (col("dist") + col("w")).as("dist"))
         .groupBy(col("node")).agg(min(col("dist")).as("dist"))
-      if (k % checkpointEvery == 0 && k < rounds) dist = dist.localCheckpoint()
     }
-    // self-contained invocation (round-13, verdict Next #1 — the pageRank
-    // note): materialize, then release the pin
-    graft.Explain.internal("shortestPaths result", dist)
-    val out = dist.localCheckpoint()
-    e.unpersist(blocking = false): Unit
-    out
+    it.finish(dist)
   }
 
   def triangleCounts(edges: DataFrame): DataFrame = {
@@ -340,26 +297,23 @@ object Graph {
     * pinned once (the q111 static-table discipline); each round is one
     * broadcast-or-shuffle semi-join of edges against the shrinking node
     * set + one map-side-combinable count aggregate. The node set is
-    * localCheckpoint-cut every `checkpointEvery` rounds so round r's plan
-    * never replays rounds 1..r−1. Degrees are exact integers end-to-end —
-    * nothing to diverge between engines. */
-  def kCorePeel(edges: DataFrame, k: Int, rounds: Int,
-                checkpointEvery: Int = 1): DataFrame = {
-    // checkpointEvery default 1 (round-13): alive is referenced TWICE per
-    // round (one broadcast per semi-join side, and the two broadcasts
-    // don't ReuseExchange — their projections differ), so every
-    // non-checkpointed round's edge-aggregate re-executes once per
-    // broadcast build; an eager node-sized cut per round keeps each peel
-    // round to exactly one pass over the pinned edges
+    * localCheckpoint-cut every round so round r's plan never replays
+    * rounds 1..r−1. Degrees are exact integers end-to-end — nothing to
+    * diverge between engines. */
+  def kCorePeel(edges: DataFrame, k: Int, rounds: Int): DataFrame = {
     require(k >= 1, "k must be positive")
     require(rounds >= 1, "need at least one peel round")
-    import org.apache.spark.storage.StorageLevel
-    val e = edges.select(col("src"), col("dst"))
-      .repartition(col("src")).persist(StorageLevel.MEMORY_AND_DISK)
+    val it = new Iterate("kCorePeel result")
+    val e = it.pinOn(edges.select(col("src"), col("dst")), "src", sorted = false)
     e.count(): Unit
-    var alive = e.select(col("src").as("node")).distinct()
     var deg: DataFrame = null
-    (1 to rounds).foreach { r =>
+    // a cut EVERY round (round-13): alive is referenced TWICE per round
+    // (one broadcast per semi-join side, and the two broadcasts don't
+    // ReuseExchange — their projections differ), so every uncut round's
+    // edge-aggregate re-executes once per broadcast build; an eager
+    // node-sized cut per round keeps each peel round to exactly one pass
+    // over the pinned edges
+    it.rounds(e.select(col("src").as("node")).distinct(), rounds, cutEvery = 1) { alive =>
       // the node set is dimension-sized (≤ |V|, shrinking every round):
       // broadcast both semi-join sides so the pinned src-partitioned edge
       // table streams in place — per round ZERO shuffles on the edge side,
@@ -369,16 +323,9 @@ object Graph {
         .join(broadcast(alive.select(col("node").as("dst"))), Seq("dst"), "left_semi")
         .groupBy(col("src").as("node")).agg(count(lit(1)).as("degree"))
         .filter(col("degree") >= k)
-      alive = deg.select(col("node"))
-      if (r % checkpointEvery == 0 && r < rounds)
-        alive = alive.localCheckpoint(eager = true)
-    }
-    // self-contained invocation (round-13, verdict Next #1 — the pageRank
-    // note): materialize, then release the pin
-    graft.Explain.internal("kCorePeel result", deg.select(col("node"), col("degree")))
-    val out = deg.select(col("node"), col("degree")).localCheckpoint()
-    e.unpersist(blocking = false): Unit
-    out
+      deg.select(col("node"))
+    }: Unit
+    it.finish(deg.select(col("node"), col("degree")))
   }
 
   /** Fixed-iteration HITS (hubs & authorities) over a directed edge list —
@@ -396,7 +343,7 @@ object Graph {
     * on both roles and pinned once. */
   def hits(edges: DataFrame, iters: Int = 3): DataFrame = {
     require(iters >= 1, "need at least one iteration")
-    import org.apache.spark.storage.StorageLevel
+    val it = new Iterate("hits result")
     // the iteration joins alternate between the src role (authority pass)
     // and the dst role (hub pass) — ONE partitioning can't serve both, so
     // pin one copy per role (q111's static-table discipline doubled) and
@@ -406,17 +353,15 @@ object Graph {
     // distribution on (src, dst) — all copies of a pair share a src — so
     // the distinct piggybacks on the role exchange instead of paying its
     // own (3 exchanges → 2 in the pin build, same distinct edge set)
-    val eSrc = edges.select(col("src"), col("dst"))
+    val eSrc = it.pin(edges.select(col("src"), col("dst"))
       .repartition(col("src")).distinct()
-      .sortWithinPartitions(col("src"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .sortWithinPartitions(col("src")))
     // the dst-role copy derives from the src copy's cache (round-12,
     // guide §1.2): building both pins from `base` executed the upstream
     // edge build + distinct twice; reading eSrc's cached blocks makes the
     // second pin one reshuffle of the edge list, not a recompute. One
     // materialization job fills BOTH pins (round-13 job-count trim).
-    val eDst = eSrc.repartition(col("dst")).sortWithinPartitions(col("dst"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val eDst = it.pinOn(eSrc, "dst")
     eDst.count(): Unit
     val D = "decimal(26,12)"
     var hub = eSrc.select(col("src").as("node")).distinct()
@@ -434,7 +379,7 @@ object Graph {
     // checkpoint is subsumed by the normalize's own cut.
     def normalize(raw: DataFrame, keyCol: String, valCol: String,
                   out: String): DataFrame = {
-      val r = raw.localCheckpoint(eager = true)
+      val r = it.cut(raw)
       val mx = broadcast(r.agg(max(col(valCol)).as("__m")))
       r.crossJoin(mx).select(col(keyCol).as("node"),
         round(col(valCol).cast("double") / col("__m").cast("double"), 12)
@@ -450,16 +395,9 @@ object Graph {
     }
     // final authority pass from the converged hubs, then both roles out
     val auth = authFrom(hub, "score")
-    // self-contained invocation (round-13, verdict Next #1 — the pageRank
-    // note): materialize, then release both role pins
-    val res = hub.select(col("node"), lit("hub").as("kind"),
+    it.finish(hub.select(col("node"), lit("hub").as("kind"),
         col("h").cast("double").as("score"))
       .unionByName(auth.select(col("node"), lit("authority").as("kind"),
-        col("score").cast("double").as("score")))
-    graft.Explain.internal("hits result", res)
-    val out = res.localCheckpoint()
-    eSrc.unpersist(blocking = false): Unit
-    eDst.unpersist(blocking = false): Unit
-    out
+        col("score").cast("double").as("score"))))
   }
 }

@@ -11,14 +11,15 @@ import graft.operators.{Dedup, Graph}
   * steady measures per-invocation cost rather than cache-manager
   * plan-match reuse of a previous iteration's pins. The result itself is
   * an eagerly materialized local checkpoint, so correctness can't depend
-  * on the released pins. */
+  * on the released pins. The loop state's superseded local checkpoints
+  * are released at exit too (operators.Iterate.finish): the result's own
+  * checkpoint is the only persistent RDD a call may leave behind. */
 class Round13OpsSpec extends SparkSuite {
   import spark.implicits._
 
   /** Persistent RDDs that are plain persist() pins (local checkpoints
-    * report isCheckpointed with no checkpoint file and are the operator's
-    * own result/loop-state materializations — the Bench iteration sweep
-    * handles those). */
+    * report isCheckpointed with no checkpoint file; [[leftBehind]] counts
+    * those). */
   private def leakedPins(): Seq[org.apache.spark.rdd.RDD[_]] =
     spark.sparkContext.getPersistentRDDs.values.toSeq
       .filterNot(r => r.isCheckpointed && r.getCheckpointFile.isEmpty)
@@ -43,9 +44,21 @@ class Round13OpsSpec extends SparkSuite {
     assert(math.abs(ranks.agg(sum("r")).head().getDouble(0) - 1.0) < 1e-6)
   }
 
-  test("labelPropagation / shortestPaths / kCorePeel / hits release pins") {
+  /** Persistent RDDs — pins and local checkpoints alike — that appeared
+    * while `run` executed and are still registered after it returned. */
+  private def leftBehind(run: => Any): Seq[Int] = {
+    val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    run
+    spark.sparkContext.getPersistentRDDs.keys.filterNot(before).toSeq
+  }
+
+  test("bfsHops / labelPropagation / shortestPaths / kCorePeel / hits release pins") {
     clearAll()
     val edges = (und ++ und.map(_.swap)).toDF("src", "dst")
+    val bfs = Graph.bfsHops(edges, Seq("a").toDF("node"), maxHops = 3)
+    assert(leakedPins().isEmpty, "bfsHops leaked pins")
+    assert(bfs.count() == 5)
+
     val lbl = Graph.labelPropagation(edges, rounds = 4)
     assert(leakedPins().isEmpty, "labelPropagation leaked pins")
     assert(lbl.filter(col("lbl") === "a").count() == 5) // one component
@@ -62,6 +75,29 @@ class Round13OpsSpec extends SparkSuite {
     val h = Graph.hits(edges, iters = 2)
     assert(leakedPins().isEmpty, "hits leaked pins")
     assert(h.filter(col("kind") === "hub").count() == 5)
+  }
+
+  test("each iterative operator leaves at most its result checkpoint behind") {
+    clearAll()
+    val edges = (und ++ und.map(_.swap)).toDF("src", "dst")
+    val seeds = Seq("a").toDF("node")
+    val pairs = Seq((1L, 2L), (2L, 3L), (10L, 11L)).toDF("doc_a", "doc_b")
+    val ops: Seq[(String, () => org.apache.spark.sql.DataFrame)] = Seq(
+      "pageRank" -> (() => Graph.pageRank(edges, iters = 5)),
+      "bfsHops" -> (() => Graph.bfsHops(edges, seeds, maxHops = 3)),
+      "labelPropagation" -> (() => Graph.labelPropagation(edges, rounds = 4)),
+      "shortestPaths" -> (() =>
+        Graph.shortestPaths(edges.withColumn("w", lit(1L)), seeds, rounds = 4)),
+      "kCorePeel" -> (() => Graph.kCorePeel(edges, k = 2, rounds = 4)),
+      "hits" -> (() => Graph.hits(edges, iters = 2)),
+      "connectedComponents" -> (() => Dedup.connectedComponents(pairs)))
+    ops.foreach { case (name, op) =>
+      var out: org.apache.spark.sql.DataFrame = null
+      val left = leftBehind { out = op() }
+      assert(left.size <= 1,
+        s"$name left ${left.size} persistent RDDs behind: ${left.sorted}")
+      assert(out.count() > 0, s"$name result unreadable")
+    }
   }
 
   test("connectedComponents releases its edge pin at exit") {
