@@ -12,15 +12,6 @@ import graft.operators.{Joins, Relational => R}
   */
 object Engine {
 
-  /** GET /users/{id} (reference: services/auth-service/crud.py:17-19). */
-  def getUser(users: DataFrame, id: String): DataFrame =
-    R.pointLookup(users, "id", id).limit(1)
-
-  /** Login lookup: username OR email with the same input
-    * (reference: services/auth-service/main.py:118-120). */
-  def findAccount(users: DataFrame, usernameOrEmail: String): DataFrame =
-    R.orLookup(users, usernameOrEmail, "username", "email").limit(1)
-
   /** GET /users?skip&limit&is_active (reference: crud.py:88-109) — listing +
     * total count, public projection only (P16: password_hash never selected,
     * shared/models/__init__.py:71-77). */
@@ -52,24 +43,11 @@ object Engine {
         "created_at")
   }
 
-  /** Pagination metadata for any listing (reference:
-    * shared/utils/__init__.py:161-172). */
-  def pageMeta(df: DataFrame, size: Int): DataFrame = R.paginationMeta(df, size)
-
   /** Task queue head: next k pending tasks by priority then age
     * (reference: init.sql:66,183). */
   def nextPendingTasks(tasks: DataFrame, k: Int): DataFrame =
     R.topK(tasks.filter(col("status") === "pending"), k,
       col("priority").desc, col("created_at").asc, col("id").asc)
-
-  /** Current status per task from the status-event log (W1 view of the
-    * state machine, reference: init.sql:7,64-65). */
-  def currentTaskStatus(statusEvents: DataFrame): DataFrame =
-    R.latestPerKey(statusEvents, "task_id", col("ts"), col("event_id"))
-
-  /** Project progress rollup (reference: progress FLOAT init.sql:65). */
-  def projectProgress(tasks: DataFrame): DataFrame =
-    R.progressRollup(tasks, "project_id", "progress")
 
   /** Cascade delete of a project: returns each child table filtered of the
     * project's rows (reference: ON DELETE CASCADE, init.sql:29,47-48,59-60). */

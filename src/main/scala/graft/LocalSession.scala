@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** One place for the local-mode session knobs shared by Verify, Bench and
-  * the tools (MicroBench, ExplainDump, ScaleUp), so correctness runs and
+  * the tools (ExplainDump, ScaleUp), so correctness runs and
   * every measurement use the same configuration. */
 object LocalSession {
 

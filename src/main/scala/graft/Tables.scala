@@ -22,7 +22,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * when each gate invocation creates fresh ones — the round-9 q509 IID
   * fix), and a checkpoint cached here would lose its blocks mid-suite
   * with a confusing missing-block error. Memoize PATHS (this object,
-  * SparkEntry.cachedFixture) or plain plans — never checkpointed RDDs.
+  * gates.Gate.cachedFixture) or plain plans — never checkpointed RDDs.
   */
 object Tables {
   val all: Seq[String] = Seq(

@@ -70,9 +70,6 @@ object Relational {
 
   // ---- aggregations (§2.4) -----------------------------------------------
 
-  /** A1/A2 — filtered COUNT (reference: services/auth-service/crud.py:103-109). */
-  def countWhere(df: DataFrame, pred: Column): Long = df.filter(pred).count()
-
   /** A3 — min/max bounding box over coordinate columns, per group
     * (reference: shared/utils/__init__.py:181-194). Single-pass partial
     * aggregation: map-side combine makes this shuffle only one row per
@@ -262,13 +259,6 @@ object Relational {
       .filter(col("span_us") > 0)
   }
 
-  /** T3 (batch view) — time-bucketed metrics: tumbling windows over an event
-    * log (reference: MetricsMiddleware running count/mean,
-    * services/api-gateway/middleware.py:68-94). */
-  def timeBuckets(df: DataFrame, ts: String, bucket: String, groupCols: Seq[String], aggs: Seq[Column]): DataFrame =
-    df.groupBy((date_trunc(bucket, col(ts)).as("bucket_ts") +: groupCols.map(col)): _*)
-      .agg(aggs.head, aggs.tail: _*)
-
   /** Uniqueness audit — parquet has no unique constraints
     * (reference: unique indexes init.sql:13-14); report violating keys. */
   def duplicateKeys(df: DataFrame, keyCols: String*): DataFrame =
@@ -390,40 +380,6 @@ object Relational {
       .agg(max(col("__len")).as("best_streak"),
         count(lit(1)).as("n_streaks"),
         sum(col("__len")).as("active_days"))
-  }
-
-  /** Conversion latency — the funnel's time axis: for every user who
-    * performed `toType` strictly after their first `fromType`, the
-    * whole-second delay between the two firsts, summarized per cohort day
-    * (count, min, quartiles, max). The quantile choice is deliberate:
-    * interpolated quartiles of INTEGER data only ever need dyadic fractions
-    * (0.25·(n−1) has fractional part ∈ {0, ¼, ½, ¾}), so `percentile` and
-    * DuckDB's `quantile_cont` produce bit-identical doubles regardless of
-    * each engine's interpolation expression shape — p90 would interpolate
-    * with non-representable 0.1 steps and diverge by an ulp (the q97
-    * threshold lesson).
-    *
-    * Scale shape: two filtered per-user aggregates + one user-key join
-    * (the funnel min-after chain), then one cohort-day aggregate; exact
-    * `percentile` is safe here because the per-cohort groups are
-    * day-bounded — at 100 TB swap for `approx_percentile` (q84 note). */
-  def conversionLatency(events: DataFrame, userCol: String, typeCol: String,
-                        tsCol: String, fromType: String, toType: String): DataFrame = {
-    val t0 = events.filter(col(typeCol) === fromType)
-      .groupBy(col(userCol)).agg(min(col(tsCol)).as("__t0"))
-    val conv = events.filter(col(typeCol) === toType)
-      .join(t0, Seq(userCol))
-      .filter(col(tsCol) > col("__t0"))
-      .groupBy(col(userCol), col("__t0")).agg(min(col(tsCol)).as("__t1"))
-    conv
-      .withColumn("__lat", expr("(unix_micros(__t1) - unix_micros(__t0)) div 1000000"))
-      .groupBy(to_date(col("__t0")).as("cohort_day"))
-      .agg(count(lit(1)).as("n_converted"),
-        min(col("__lat")).as("min_sec"),
-        expr("percentile(__lat, 0.25)").as("p25_sec"),
-        expr("percentile(__lat, 0.5)").as("median_sec"),
-        expr("percentile(__lat, 0.75)").as("p75_sec"),
-        max(col("__lat")).as("max_sec"))
   }
 
   /** Rolling N-day distinct active users — the WAU/MAU sibling of

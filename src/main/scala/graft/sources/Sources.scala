@@ -22,11 +22,6 @@ object Sources {
   def readJsonLines(spark: SparkSession, path: String, schema: StructType): DataFrame =
     spark.read.schema(schema).json(path)
 
-  /** Always pass an explicit schema at scale: schema inference is a full
-    * extra pass over the input. */
-  def readParquet(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
-
   // ---- sinks ----
 
   /** S5 — append rows (ORM add/commit analog,
@@ -147,14 +142,6 @@ object Sources {
   }
 
   // ---- S12: external-job pattern (WebODM, DECL tier) ----
-
-  /** External-job tracking table (reference: webodm_tasks init.sql:74-94):
-    * submissions are appended, progress/status arrive as events; the current
-    * view is latest-per-job (W1) and artifacts land through the S3/S4 binary
-    * path. Provided as a composition, not a new operator. */
-  def currentJobStatus(jobEvents: DataFrame): DataFrame =
-    graft.operators.Relational.latestPerKey(
-      jobEvents, "job_id", col("ts"), col("event_id"))
 
   /** S12 driven by the declared schemas (graft.Schemas.processingTasks ⋈
     * graft.Schemas.webodmTasks ← init.sql:56-71,84-94): the combined job view

@@ -72,7 +72,7 @@ class SpcWaveSpec extends SparkSuite {
     // (0,0) lies in the 's' macro-cell (geohash 's00000' at the cell
     // corner); (-180,-90) is the all-zero-bits corner '000000'
     val got = spark.sql(
-      "SELECT " + SparkEntry.geohashExprForTest("lon", "lat") +
+      "SELECT " + graft.gates.SpatialGates.geohashExprForTest("lon", "lat") +
         " AS gh FROM VALUES (0L, 0L), (-180L, -90L) AS t(lon, lat)")
       .collect().map(_.getString(0)).toSeq
     assert(got == Seq("s00000", "000000"))
